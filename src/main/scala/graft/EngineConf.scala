@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine-interaction configuration shared by EVERY entrypoint
-  * (Verify, Bench, Sf1Bench, QueryProfile, PhaseProbe) — one definition
-  * site so the verified path and the timed path run the same engine
+  * (Verify, Bench, Sf1Bench, QueryProfile, PhaseProbe) and the test
+  * session (`SparkSpec`) — one definition site so the verified path, the
+  * tested path and the timed path run the same engine
   * (round-15 advice: Verify was missing the codegen fallback the bench
   * ran with, so verification exercised a different execution mode than
   * the numbers it vouched for).
@@ -27,7 +28,8 @@ import org.apache.spark.sql.SparkSession
   *   Tables.normalizeEventTs is session-TZ-dependent; unpinned sessions
   *   on a non-UTC host would bucket day-granularity windows differently.
   * - nanosAsLong: older testdata generations carried TIMESTAMP(NANOS)
-  *   events (harmless for µs-typed parquet).
+  *   events (harmless for µs-typed parquet). Set here once, never per
+  *   load: `Tables.load` relies on it and keys its schema memo on it.
   */
 object EngineConf {
   def common(b: SparkSession.Builder): SparkSession.Builder = b

@@ -124,6 +124,10 @@ object Tables {
     }
   }
 
+  /** Table `name` in contract shape: the catalog table when catalog mode
+    * serves it, otherwise [[loadParquet]], whose schema memo makes a repeat
+    * load of an unchanged file launch no Spark job.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Catalog mode (SPARK_GRAFT_CATALOG set + table materialized): serve
     // the metastore-backed managed table in contract shape — the whole
@@ -140,14 +144,73 @@ object Tables {
     * rebuild path: `CatalogTables.materialize(overwrite = true)` must read
     * the SOURCE parquet, not the very catalog table it is about to
     * overwrite (Spark forbids overwriting a table that is also read).
+    *
+    * Reads through [[readParquet]], so only the first load of an unchanged
+    * file pays schema inference; [[conform]] still runs on every load, so a
+    * drifted file still fails loudly. ns-typed parquet decodes as BIGINT
+    * (then conformed) because every session is built with
+    * `spark.sql.legacy.parquet.nanosAsLong` (`EngineConf.common`).
     */
-  def loadParquet(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Session-wide legacy conf so ns-typed parquet decodes as BIGINT
-    // (then conformed) instead of failing in the vectorized reader;
-    // harmless for µs-typed files. Applies to every table — round 6
-    // proved any table can drift, not just events.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    conform(name, spark.read.parquet(s"$dir/$name.parquet"))
+  def loadParquet(spark: SparkSession, dir: String, name: String): DataFrame =
+    conform(name, readParquet(spark, s"$dir/$name.parquet"))
+
+  /** Session parquet confs whose values change what inference returns. */
+  private val inferenceConfs = {
+    import org.apache.spark.sql.internal.SQLConf._
+    Seq(LEGACY_PARQUET_NANOS_AS_LONG, PARQUET_BINARY_AS_STRING,
+      PARQUET_INT96_AS_TIMESTAMP, PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      PARQUET_SCHEMA_MERGING_ENABLED)
+  }
+
+  /** What an inferred schema depends on: the qualified path (a glob, as
+    * `spark.read.parquet` takes it), every file it matches or holds as
+    * (path, length, mtime), and the values of [[inferenceConfs]].
+    */
+  private final case class SchemaKey(path: String,
+      files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  private def schemaKey(spark: SparkSession, path: String): SchemaKey = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(p)
+    def under(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else {
+        val it = fs.listFiles(st.getPath, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
+      }
+    // A missing path matches nothing; the read then fails as
+    // `spark.read.parquet` does, and nothing is memoized.
+    val files = Option(fs.globStatus(root)).toSeq.flatten.flatMap(under)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    SchemaKey(root.toString, files.sorted,
+      inferenceConfs.map(e => spark.conf.getOption(e.key)))
+  }
+
+  /** Inferred parquet schemas by [[SchemaKey]]. Metadata only, never a
+    * `DataFrame`: a cached frame would reuse attribute ids and break
+    * self-joins, and the bench's `clearCache` must still drop all data.
+    * A rewritten or added file changes the listing, so it re-infers.
+    */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** `spark.read.parquet(path)`, launching its schema-inference job only
+    * when [[SchemaKey]] is new; otherwise the scan is read with the
+    * memoized schema. No [[conform]]: the raw decoded shape, for readers
+    * (the streaming sources) that prepare the frame themselves. Use it for
+    * input tables only; a path rewritten on every run only adds entries.
+    * Get-then-put, not `computeIfAbsent`, which would hold a map lock while
+    * the job runs; two racing first reads both infer the same schema.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = schemaKey(spark, path)
+    Option(schemas.get(key)).fold {
+      val inferred = spark.read.parquet(path)
+      schemas.put(key, inferred.schema)
+      inferred
+    }(spark.read.schema(_).parquet(path))
   }
 
   /** Normalize the `ts` column to session-TZ TIMESTAMP regardless of the

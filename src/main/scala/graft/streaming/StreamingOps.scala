@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -92,7 +93,7 @@ object StreamingOps {
     */
   private def fileStream(spark: SparkSession, dir: String,
       fileName: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/$fileName").schema
+    val schema = Tables.readParquet(spark, s"$dir/$fileName").schema
     // `$dir/$fileName` ships in two physical shapes: a single parquet FILE
     // (the testdata convention — glob-filter it out of the directory) or a
     // Spark-written DIRECTORY of part files (any materialized table — the
@@ -248,7 +249,7 @@ object StreamingOps {
         .select(col("window_start").cast("date").as("window_start"),
           col(keyCol), col("n"), col("sum_value"))
     else
-      prepare(spark.read.parquet(s"$dir/$fileName")).limit(0)
+      prepare(Tables.readParquet(spark, s"$dir/$fileName")).limit(0)
         .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window),
           col(keyCol))
         .agg(count(lit(1)).as("n"),
@@ -303,7 +304,7 @@ object StreamingOps {
     // the store reads batch-count-invariant.
     if (new java.io.File(outPath).exists())
       spark.read.parquet(outPath).drop("batch")
-    else score(spark.read.parquet(s"$dir/$fileName")).limit(0)
+    else score(Tables.readParquet(spark, s"$dir/$fileName")).limit(0)
   }
 
   /** Streaming CDC compaction: a continuously-maintained latest-state-per-key
@@ -430,7 +431,7 @@ object StreamingOps {
       .filter(col("r") <= k)
       .select(col("grp"), col("r"), col("h"))
     SketchOps.kmvDistinctCard(kept,
-      prepare(spark.read.parquet(s"$dir/$fileName")), k)
+      prepare(Tables.readParquet(spark, s"$dir/$fileName")), k)
   }
 
   /** Stateful running EWMA per key (`mapGroupsWithState` — the recurrence
@@ -646,7 +647,7 @@ object StreamingOps {
   def streamingPsiDrift(spark: SparkSession, dir: String, fileName: String,
       keyCol: String, tsCol: String, valCol: String, nBins: Int,
       sink: StreamSink, prepare: DataFrame => DataFrame = identity): DataFrame = {
-    val static = prepare(spark.read.parquet(s"$dir/$fileName"))
+    val static = prepare(Tables.readParquet(spark, s"$dir/$fileName"))
     val usCol = unix_micros(col(tsCol))
     val range = static.agg(min(usCol).as("__mn_us"), max(usCol).as("__mx_us"))
     val bounds = static
@@ -735,7 +736,7 @@ object StreamingOps {
       .select(col("grp"), col("j"), col("m_j"))
     val est = SketchOps.hllEstimate(
       streamed.unionByName(regsAll), Seq("grp"))
-    val keyedBatch = prepare(spark.read.parquet(s"$dir/$fileName"))
+    val keyedBatch = prepare(Tables.readParquet(spark, s"$dir/$fileName"))
     val exact = keyedBatch
       .unionByName(keyedBatch.withColumn("grp", lit("ALL")))
       .groupBy(col("grp")).agg(countDistinct(col("k")).as("n_exact"))
@@ -1090,7 +1091,7 @@ object StreamingOps {
     val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
     sunk.collect().foreach(rows.add)
     val streamed = spark.createDataFrame(rows, sunk.schema)
-    val terms = spark.read.parquet(s"$dir/$fileName")
+    val terms = Tables.readParquet(spark, s"$dir/$fileName")
       .select(explode(split(trim(col(textCol)), " ")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("n_exact"))
     SketchOps.cmsFinishHeavyHitters(terms, streamed, depth, width, k)
@@ -1126,10 +1127,10 @@ object StreamingOps {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("pos",
           org.apache.spark.sql.types.LongType))))
-    val bKeys = prepareBuild(spark.read.parquet(s"$dir/$buildFile"))
+    val bKeys = prepareBuild(Tables.readParquet(spark, s"$dir/$buildFile"))
       .select(col(buildKey).cast("string").as("k")).distinct()
     SketchOps.bloomCardFromBits(bKeys, bits,
-      spark.read.parquet(s"$dir/$probeFile"), probeKey, kHashes, mBits)
+      Tables.readParquet(spark, s"$dir/$probeFile"), probeKey, kHashes, mBits)
   }
 
   /** Streaming PII scrub card ≡ batch (q231's twin — the continuous-
@@ -1314,7 +1315,7 @@ object StreamingOps {
     val rowsBuf = new java.util.ArrayList[org.apache.spark.sql.Row]()
     sunk.collect().foreach(rowsBuf.add)
     val streamed = spark.createDataFrame(rowsBuf, sunk.schema)
-    val exact = prepare(spark.read.parquet(s"$dir/$fileName"))
+    val exact = prepare(Tables.readParquet(spark, s"$dir/$fileName"))
       .groupBy(col("k")).agg(count(lit(1)).as("f"))
       .agg(sum(col("f").cast("decimal(38,0)") *
         col("f").cast("decimal(38,0)")).cast("long").as("f2_exact"))

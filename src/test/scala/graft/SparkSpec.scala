@@ -4,18 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs — one JVM-wide session keeps the
-  * suite fast; `shuffle.partitions=5` (not 1) so partition-related bugs
-  * (order dependence, missing tiebreaks) surface even on tiny data.
+  * suite fast. Built through `EngineConf.common`, so specs run the same
+  * engine conf as Verify and Bench; `shuffle.partitions=5` (not 1) so
+  * partition-related bugs (order dependence, missing tiebreaks) surface
+  * even on tiny data.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = EngineConf.common(SparkSession.builder()
       .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", 5)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", 5))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
